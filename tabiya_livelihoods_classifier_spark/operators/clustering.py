@@ -1,10 +1,22 @@
-"""Connected components (transitive closure) via contraction + hash-min.
+"""Connected components (transitive closure): driver first, contraction +
+hash-min for graphs that do not fit the driver.
 
 Semantic ancestor in the reference: the memoized DAG-chain DFS
 (3_2b_clean_LLM_create_opp-db.py:473-532) — transitive reachability with a
-memo table. The Spark realization is a two-level scheme tuned for ER
-graphs, which are overwhelmingly dense cliques (every record in a cluster
-pairs with most others):
+memo table.
+
+**Driver path (the common case).** After blocking and scoring, the graph
+that clustering sees is far smaller than the corpus (SparkER, EDBT 2019),
+and the battery's graphs have tens to thousands of vertices. So the
+operator starts with ONE bounded collect of the edge set and one of
+`nodes` (`limit(_PROBE_ROWS + 1)` each), gated on the byte budget
+`DRIVER_STITCH_MAX_BYTES`. When both fit, a union-find on the driver
+answers, and the result is a single Arrow-built `LocalRelation`: no
+checkpoint, no contraction, no upstream lineage in the returned plan, and
+one or two jobs in all.
+
+**Distributed path** (either probe comes back full or over budget), tuned
+for ER graphs, which are overwhelmingly dense cliques:
 
 1. **Contraction pass** (one shuffle over the full edge set): every node
    takes label = min(self, neighbors). In a clique this already assigns
@@ -13,71 +25,89 @@ pairs with most others):
 2. **Reduced graph**: edges re-expressed between representative labels;
    after contraction this collapses each dense cluster to a point, leaving
    only bridge edges (measured: 11.6M edges -> a few thousand).
-3. **Hash-min loop on the reduced graph** — the classic
-   `comp(v) <- min(comp(v), min over neighbors comp(u))` iteration, now
-   over a table thousands of times smaller; each iteration RELIABLY
-   checkpoints its labels (lineage truncation is structurally required —
-   the hash-min + pointer-doubling plan references the previous labels
-   twice, so an un-truncated plan doubles per iteration), a changed-label
+3. **Solve the reduced graph**: a driver union-find again when the reduced
+   graph is driver-sized (the post-contraction stitch, also Arrow-built),
+   else the hash-min loop — `comp(v) <- min(comp(v), min over neighbors
+   comp(u))` with pointer doubling — whose labels are RELIABLY
+   checkpointed each iteration (the plan references the previous labels
+   twice, so an un-truncated plan doubles per iteration). A changed-label
    count detects fixpoint, and a max-iteration guard bounds pathological
    inputs.
+4. Final labels = contraction labels composed with reduced-graph labels.
 
 Durability (VERDICT r3 'What's wrong' #3): nothing here uses
 `localCheckpoint` — it stores blocks on executors only, so one lost
-executor kills the job unrecoverably on a real cluster. EVERY barrier here
-(sym/l1/reduced and the loop labels) is a reliable `checkpoint()` against
-the session's checkpoint dir (durable shared storage on a cluster —
-session.py). `persist()` is NOT a substitute even for the one-shot
-intermediates: it keeps the full logical plan, and the ER caller's
-upstream lineage (Arrow-scored pairs over exploded MinHash blocks over the
-records aggregation) is large enough that Catalyst re-optimization of the
-un-truncated plan on every downstream action dominated the entire stage —
-measured at bench4/local[8]: 156 s for the clusters stage under persist
-vs ~1.5 s with lineage truncation, with identical cached data. Post-
-contraction tables are a few thousand rows, so the checkpoint write is
-noise; sym (2|E|) is written once and read twice, the same touch count
-the contraction pass already guarantees.
-4. Final labels = contraction labels composed with reduced-graph labels.
+executor kills the job unrecoverably on a real cluster. Every barrier of
+the distributed path (sym/l1/reduced and the loop labels) is a reliable
+`checkpoint()` against the session's checkpoint dir (durable shared
+storage on a cluster — session.py). `persist()` is NOT a substitute: it
+keeps the full logical plan, and Catalyst re-optimizing the ER caller's
+deep upstream lineage on every downstream action dominated the whole
+stage (bench4/local[8]: 156 s under persist vs ~1.5 s truncated). The
+driver path truncates lineage by construction: its result is data, not a
+plan.
 
-Exactness: contraction is a standard CC-preserving transformation (each
-node's label is inside its own component, and the reduced graph preserves
-inter-representative connectivity), so the composition equals true CC —
-asserted against the UnionFind oracle and DuckDB recursive-CTE oracles
-(tests/test_pipeline_f1.py, q24/q26).
+Exactness: union-find and contraction + hash-min both compute true CC with
+component = min vertex id — asserted against each other row for row
+(tests/test_clustering.py), against the UnionFind oracle and against
+DuckDB recursive-CTE oracles (tests/test_pipeline_f1.py, q24/q26).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
-# The post-contraction representative graph holds only inter-cluster bridge
-# edges; below this size a driver union-find beats per-iteration job
-# latency. The gate is BYTE-estimated, not a fixed row count: rows are
-# admitted only while estimated payload (sampled avg id width x rows) stays
-# under this budget, so wide ids shrink the row allowance automatically.
+from tabiya_livelihoods_classifier_spark.session import (
+    arrow_frame,
+    ensure_checkpoint_dir,
+)
+
+# Byte budget for anything this operator (and operators/graph) collects to
+# or builds on the driver: the up-front edge + node probe, the
+# post-contraction stitch and the closure output. It is BYTE-estimated,
+# not a fixed row count: rows are admitted only while estimated payload
+# (sampled avg id width x rows) stays under this budget, so wide ids
+# shrink the row allowance automatically.
 DRIVER_STITCH_MAX_BYTES = 64 * 1024 * 1024
 
-# One probe collect bounds the driver-stitch decision: if the reduced graph
-# has at most this many edges, the probe ALREADY collected all of them (one
-# job total — no separate count + sample + collect); larger graphs fall
-# through to a byte-estimated gate.
+# Row bound of one probe collect: a frame of at most this many rows comes
+# back whole from ONE job (no separate count + sample + collect).
 _PROBE_ROWS = 200_000
 
 
 def _bytes_per_row(rows) -> float:
-    """Estimated collected size of a (src, dst) Row: string payload +
+    """Estimated collected size of a Row: string payload of its fields +
     ~100 B/row Python-object overhead."""
     if not rows:
         return 116.0
-    payload = sum(len(str(r["src"])) + len(str(r["dst"])) for r in rows)
+    payload = sum(len(str(v)) for r in rows for v in r)
     return payload / len(rows) + 100.0
 
 
-def _driver_union_find(edge_rows) -> list[tuple]:
-    """Union-find over collected (src, dst) rows; returns (node, min-root)
-    pairs for every node that appears in the reduced graph."""
+def bounded_collect(df: DataFrame) -> tuple[list | None, float]:
+    """ONE bounded collect: (rows, estimated bytes) when `df` has at most
+    `_PROBE_ROWS` rows, else (None, inf).
+
+    The byte estimate comes from a STRIDE sample across the whole probe
+    (not its first 1000 rows): id widths can drift through the dataset and
+    a prefix sample would under-estimate the collected payload.
+    """
+    rows = df.limit(_PROBE_ROWS + 1).collect()
+    if len(rows) > _PROBE_ROWS:
+        return None, math.inf
+    sample = rows[:: max(1, len(rows) // 1000)]
+    return rows, len(rows) * _bytes_per_row(sample)
+
+
+def _driver_union_find(pairs, nodes=()) -> dict:
+    """Union-find over (a, b) pairs plus isolated `nodes`; returns
+    {vertex: component min} for every vertex seen. Unions always hang the
+    larger root under the smaller, so every root is its set's minimum."""
     parent: dict = {}
 
     def find(x):
@@ -87,18 +117,14 @@ def _driver_union_find(edge_rows) -> list[tuple]:
             x = parent[x]
         return x
 
-    for r in edge_rows:
-        ra, rb = find(r["src"]), find(r["dst"])
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    comp_min: dict = {}
-    for node in parent:
-        root = find(node)
-        cur = comp_min.get(root)
-        if cur is None or node < cur:
-            comp_min[root] = node
-    return [(node, comp_min[find(node)]) for node in parent]
+    for v in nodes:
+        find(v)
+    return {v: find(v) for v in list(parent)}
 
 
 def _min_neighbor_labels(sym: DataFrame, verts: DataFrame) -> DataFrame:
@@ -121,14 +147,44 @@ def connected_components(
 
     `edges` columns: id_a, id_b (string or numeric ids; min() must be a
     total order). `nodes` optionally supplies isolated vertices (column
-    rid); they come out as singleton components.
+    rid); they come out as singleton components. Every vertex of edges ∪
+    nodes appears once.
     """
-    # Caller contract: this operator reliably checkpoints, and it may run
-    # on an arbitrary session (the driver harness builds its own); make the
-    # checkpoint dir self-sufficient instead of assuming get_spark() ran.
-    from tabiya_livelihoods_classifier_spark.session import ensure_checkpoint_dir
-
+    # Caller contract: this operator may checkpoint (the distributed path),
+    # and it may run on an arbitrary session (the driver harness builds its
+    # own); make the checkpoint dir self-sufficient up front instead of
+    # assuming get_spark() ran.
     ensure_checkpoint_dir(edges.sparkSession)
+    # the id type the distributed path's unions resolve to (analysis only)
+    ends = edges.select(F.col("id_a").alias("rid")).union(
+        edges.select(F.col("id_b").alias("rid"))
+    )
+    if nodes is not None:
+        ends = ends.union(nodes.select("rid"))
+    id_type = ends.schema["rid"].dataType
+
+    edge_rows, est = bounded_collect(
+        edges.select(F.col("id_a").cast(id_type), F.col("id_b").cast(id_type))
+    )
+    node_rows: list = []
+    if nodes is not None and est <= DRIVER_STITCH_MAX_BYTES:
+        node_rows, node_est = bounded_collect(
+            nodes.select(F.col("rid").cast(id_type))
+        )
+        est += node_est
+    if est <= DRIVER_STITCH_MAX_BYTES:
+        comp = _driver_union_find(edge_rows, (r[0] for r in node_rows))
+        schema = StructType(
+            [StructField("rid", id_type), StructField("component", id_type)]
+        )
+        return arrow_frame(edges.sparkSession, list(comp.items()), schema)
+    return _distributed_components(edges, nodes, max_iter)
+
+
+def _distributed_components(
+    edges: DataFrame, nodes: DataFrame | None, max_iter: int
+) -> DataFrame:
+    """Contraction -> reduced graph -> stitch or hash-min -> compose."""
     sym = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -184,16 +240,23 @@ def connected_components(
         use_driver = est <= DRIVER_STITCH_MAX_BYTES
         edge_rows = None
     if use_driver:
-        rep_rows = _driver_union_find(
+        rep_map = _driver_union_find(
             edge_rows if edge_rows is not None else reduced.collect()
         )
-        if not rep_rows:
+        if not rep_map:
             return l1.select("rid", F.col("label").alias("component"))
-        spark = edges.sparkSession
+        label_t = l1.schema["label"].dataType
         rep = F.broadcast(
-            spark.createDataFrame(rep_rows, "label string, rep_component string")
-            if isinstance(rep_rows[0][0], str)
-            else spark.createDataFrame(rep_rows, ["label", "rep_component"])
+            arrow_frame(
+                edges.sparkSession,
+                list(rep_map.items()),
+                StructType(
+                    [
+                        StructField("label", label_t),
+                        StructField("rep_component", label_t),
+                    ]
+                ),
+            )
         )
     else:
         labels = (

@@ -1,20 +1,36 @@
 """Iterative graph operators: transitive ancestor closure (SURVEY J8).
 
 Semantic ancestor: the reference's memoized DAG-chain DFS with cycle cut
-(3_2b_clean_LLM_create_opp-db.py:473-532). The Spark form is an iterative
-self-join to fixpoint: paths ∪ (paths ⨝ edges), deduped each round, each
+(3_2b_clean_LLM_create_opp-db.py:473-532).
+
+`transitive_ancestors` is driver first, like
+`operators/clustering.connected_components`: ONE bounded collect of the
+edge set, gated on the same byte budget (`DRIVER_STITCH_MAX_BYTES`), then
+a per-node DFS on the driver that gives up as soon as the output passes
+that budget. A closure that fits comes back as one Arrow-built
+`LocalRelation`: one job, no checkpoint, no upstream lineage.
+
+Otherwise the distributed form is an iterative self-join to fixpoint with
+pointer doubling: closure ∪ (closure ⨝ closure), deduped each round, each
 round's closure RELIABLY checkpointed (lineage truncation is structurally
 required — the closure feeds both union branches, so the plan would double
 per round; reliable checkpoint survives executor loss, unlike
-localCheckpoint — cf. operators/clustering). Cycles terminate because the
-reachable-pair set is finite (the dedupe plays the reference's visited-set
-role). Iterations = longest simple path, shuffles bounded accordingly.
+localCheckpoint). Cycles terminate on both paths because the
+reachable-pair set is finite (the visited set / the dedupe play the
+reference's cycle cut); the doubling loop takes O(log longest path)
+rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tabiya_livelihoods_classifier_spark.operators import clustering
+from tabiya_livelihoods_classifier_spark.session import (
+    arrow_frame,
+    ensure_checkpoint_dir,
+)
 
 
 def weighted_ancestors(
@@ -59,20 +75,51 @@ def kernel_scores(
     return ancestors.withColumn("score", F.exp(-lam * F.col("dist")))
 
 
+def _driver_closure(pairs, max_rows: float) -> list | None:
+    """(node, ancestor) for every ancestor reachable from each node over the
+    (child, parent) `pairs`; None as soon as the output passes `max_rows`."""
+    parents: dict = {}
+    for child, parent in pairs:
+        parents.setdefault(child, set()).add(parent)
+    out: list = []
+    for node, first in parents.items():
+        seen: set = set()
+        stack = list(first)
+        while stack:
+            a = stack.pop()
+            if a not in seen:
+                seen.add(a)
+                stack.extend(parents.get(a, ()))
+        out.extend((node, a) for a in seen)
+        if len(out) > max_rows:
+            return None
+    return out
+
+
 def transitive_ancestors(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     """(node, ancestor) for every ancestor reachable via child->parent edges.
 
     `edges` columns: child, parent.
     """
-    # self-sufficient reliable-checkpoint dir on whatever session the
-    # caller passed (cf. operators/clustering.connected_components)
-    from tabiya_livelihoods_classifier_spark.session import ensure_checkpoint_dir
-
+    # self-sufficient reliable-checkpoint dir for the doubling fallback on
+    # whatever session the caller passed (cf. connected_components)
     ensure_checkpoint_dir(edges.sparkSession)
-    closure = edges.select(
+    base = edges.select(
         F.col("child").alias("node"), F.col("parent").alias("ancestor")
-    ).dropDuplicates()
-    closure = closure.checkpoint(eager=True)
+    )
+    rows, est = clustering.bounded_collect(base)
+    budget = clustering.DRIVER_STITCH_MAX_BYTES
+    if est <= budget:
+        # output rows carry the same ids as the edges: same width per row
+        closure = _driver_closure(rows, budget * len(rows) / est if rows else 0)
+        if closure is not None:
+            return arrow_frame(edges.sparkSession, closure, base.schema)
+    return _doubling_closure(base, max_iter)
+
+
+def _doubling_closure(base: DataFrame, max_iter: int) -> DataFrame:
+    """The checkpointed pointer-doubling loop over the deduped edges."""
+    closure = base.dropDuplicates().checkpoint(eager=True)
     n = closure.count()
     for _ in range(max_iter):
         # pointer doubling: compose the closure WITH ITSELF (not with the

@@ -32,6 +32,7 @@ from tabiya_livelihoods_classifier_spark.operators.graph import (
     kernel_scores,
     weighted_ancestors,
 )
+from tabiya_livelihoods_classifier_spark.session import arrow_frame
 
 # matching_config.json:5-12
 HIERARCHY_WEIGHT = 1.0
@@ -176,7 +177,7 @@ def _link_entities_arrow(
             "ANN index) instead of a driver-collected broadcast."
         )
     if not tax_rows:
-        return spark.createDataFrame([], out_schema)
+        return arrow_frame(spark, [], out_schema)
     by_type: dict[str, list] = {}
     for r in tax_rows:
         by_type.setdefault(r.entity_type, []).append(r)

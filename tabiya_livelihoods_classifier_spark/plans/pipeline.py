@@ -583,8 +583,9 @@ def er_pipeline(
     """
     # optional stage timing (bench decomposition): the eager parquet
     # barrier makes conversation_records() a synchronous corpus-scale
-    # stage, and connected_components() runs its own eager barrier + probe,
-    # so wall-clock around these calls attributes records vs tail honestly.
+    # stage, and connected_components() eagerly collects its edge probe
+    # (and, past the driver budget, checkpoints eagerly), so wall-clock
+    # around these calls attributes records vs tail honestly.
     import time as _time
 
     _t0 = _time.perf_counter()

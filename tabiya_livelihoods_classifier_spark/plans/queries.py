@@ -33,7 +33,7 @@ from tabiya_livelihoods_classifier_spark.functions.text import (
 from tabiya_livelihoods_classifier_spark.operators.blocking import (
     minhash_signature,
 )
-from tabiya_livelihoods_classifier_spark.session import ensure_session
+from tabiya_livelihoods_classifier_spark.session import arrow_frame, ensure_session
 
 # --------------------------------------------------------------------------
 # table access
@@ -1525,7 +1525,7 @@ def _knn_topk_numpy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         f"candidate_label {lab_t}, sim double"
     )
     if not qrows:
-        return spark.createDataFrame([], out_schema + ", rnk int")
+        return arrow_frame(spark, [], out_schema + ", rnk int")
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qlab = np.array([r["label"] for r in qrows], dtype=object)
     qmat = np.array([r["q"] for r in qrows], dtype=np.float64)
@@ -3069,7 +3069,7 @@ def _entity_linking_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_id bigint, entity_type string, tax_id bigint, sim double"
     )
     if not erows:
-        return spark.createDataFrame([], out_schema + ", rnk int").select(
+        return arrow_frame(spark, [], out_schema + ", rnk int").select(
             "entity_id", "entity_type", "tax_id",
             F.round("sim", 6).alias("sim"), "rnk",
         )
@@ -3357,7 +3357,7 @@ def q41_ir_multi_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw embeddings for the relevance pool — same rationale as q21
     nrel = _nrel_per_query(load(spark, sf_dir, "embeddings"))
     dec = "decimal(18,12)"
-    ks = spark.createDataFrame([(k,) for k in IR_K_GRID], "k int")
+    ks = arrow_frame(spark, [(k,) for k in IR_K_GRID], "k int")
     fan = rel.crossJoin(F.broadcast(ks)).filter(F.col("rnk") <= F.col("k"))
     cum_w = (
         Window.partitionBy("k", "query_id")

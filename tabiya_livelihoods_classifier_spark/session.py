@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -107,6 +108,33 @@ def ensure_session(spark: SparkSession) -> SparkSession:
     # without SPARK_GRAFT_CHECKPOINT_DIR configured.
     spark.conf.set(marker, "true")
     return spark
+
+
+def arrow_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """DataFrame of driver-made ``rows`` (tuples), built from one Arrow table.
+
+    Spark turns an Arrow table into a ``LocalRelation`` on the driver (a
+    JVM-side RDD past ``spark.sql.execution.arrow.localRelationThreshold``);
+    no Python worker is involved. ``createDataFrame(<list>)`` ships pickled
+    rows through
+    ``SparkContext.parallelize``, which starts a second pool of Python
+    workers next to the Arrow UDF pool, only to hand a few rows to the JVM.
+    ``schema`` is a StructType or a DDL string; values are cast to it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -118,6 +118,7 @@ from tabiya_livelihoods_classifier_spark.plans.pipeline import (
     signature_block_membership_raw,
     signature_records,
 )
+from tabiya_livelihoods_classifier_spark.session import arrow_frame
 from tabiya_livelihoods_classifier_spark.storage import (
     StageStore,
     _atomic_write_json,
@@ -444,8 +445,8 @@ def incremental_er_update(
     new_gen = gen + 1
 
     frozen = (
-        spark.createDataFrame([(st["stop1"],)], "stop1_arr array<string>"),
-        spark.createDataFrame([(st["stop"],)], "stop_arr array<string>"),
+        arrow_frame(spark, [(st["stop1"],)], "stop1_arr array<string>"),
+        arrow_frame(spark, [(st["stop"],)], "stop_arr array<string>"),
     )
     dvocab: dict = {}
     d_records = conversation_records(

@@ -3,6 +3,8 @@
 Usage: python tools/explain_query.py <out_dir> <suffix> [sf_dir] [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query (default: all).
+Runs on local[$SPARK_GRAFT_CPUS] (local[*] when unset), the core count
+bench.py plans for, so captured plans match the benchmarked ones.
 Plan-build side effects (StageStore commits for staged queries) go to
 SPARK_GRAFT_STAGE_DIR; point it somewhere persistent so repeated captures
 reuse the committed stages instead of re-materializing them.
@@ -27,8 +29,7 @@ def main() -> int:
     from tabiya_livelihoods_classifier_spark.plans import queries as Q
     from tabiya_livelihoods_classifier_spark.session import get_spark
 
-    spark = get_spark(app_name="explain", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="explain", shuffle_partitions=8)
     # staged queries (q12/q14/q22...) explain as a bare snapshot read; the
     # *_plan entries expose the computation behind the commit
     inner = {
