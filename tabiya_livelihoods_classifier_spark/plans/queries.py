@@ -1451,10 +1451,10 @@ def _quantized_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x,
     )
     # Zero-norm vectors are excluded from BOTH roles (query and candidate):
-    # cosine of a zero vector is 0/0 = NaN, and the two exact-kNN strategies
+    # cosine of a zero vector is 0/0 = NaN, and the two _cosine_topk paths
     # disagree on NaN ordering (numpy argsort ranks NaN last and the
     # isfinite mask drops it; Spark's window ORDER BY sim DESC ranks NaN
-    # FIRST) — so the cross-strategy bitwise contract silently breaks on a
+    # FIRST) — so the cross-path bitwise contract silently breaks on a
     # degenerate row. Mirrored as `nq > 0` in every oracle twin's norms CTE.
     return vecs.withColumn("nq", nq).filter(F.col("nq") > 0)
 
@@ -1483,168 +1483,205 @@ def _idcg_table(spark: SparkSession, kmax: int) -> DataFrame:
     return ranks.select("r", idcg.alias("idcg"))
 
 
-# Gate for the numpy block-matmul exact scorer: the query matrix (every
-# 10th vector) is collected and broadcast to executors, so it must be
-# bounded. At this cap the broadcast is <= ~50k queries x 64 int64 ~ 25 MB
-# — the same order as Spark's own broadcast-join threshold. Above it the
-# relational shuffle-replicated cartesian runs instead (no driver collect,
-# no broadcast — survives any corpus size; q22's IVF is the sub-quadratic
-# route anyway).
-KNN_NUMPY_MAX_ROWS = 500_000
-
-
-def _knn_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Exact brute-force cosine top-k (queries = every 10th vector).
-
-    Two physical strategies under one contract:
-    - numpy block matmul (corpus <= KNN_NUMPY_MAX_ROWS): the quantized
-      query matrix is broadcast and each Arrow batch of candidates is scored
-      with one BLAS matmul + per-batch partial top-k — ~20x the
-      element-at-a-time Catalyst aggregate-HOF dot product, and exact:
-      integer-valued float64 products/sums stay < 2^53.
-    - relational cartesian above the gate (see _knn_topk_relational).
-    """
-    if _table_rows(sf_dir, "embeddings") <= KNN_NUMPY_MAX_ROWS:
-        return _knn_topk_numpy(spark, sf_dir, k)
-    return _knn_topk_relational(spark, sf_dir, k)
-
-
-def _knn_topk_numpy(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    import numpy as np
-
-    vecs = _quantized_vecs(spark, sf_dir)
-    # bounded driver collect (see KNN_NUMPY_MAX_ROWS): queries only
-    qrows = (
-        vecs.filter(F.col("vec_id") % 10 == 0)
-        .select("vec_id", "label", "q", "nq")
-        .collect()
-    )
-    lab_t = dict(vecs.dtypes)["label"]  # follow the corpus label type
-    out_schema = (
-        f"query_id bigint, candidate_id bigint, query_label {lab_t}, "
-        f"candidate_label {lab_t}, sim double"
-    )
-    if not qrows:
-        return arrow_frame(spark, [], out_schema + ", rnk int")
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qlab = np.array([r["label"] for r in qrows], dtype=object)
-    qmat = np.array([r["q"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["nq"] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, qlab, qmat, qnrm))
-    kk = int(k)
-
-    def score_blocks(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        b_qids, b_qlab, b_qmat, b_qnrm = bc.value
-        nq = len(b_qids)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cid = pdf["vec_id"].to_numpy(dtype=_np.int64)
-            cmat = _np.array(list(pdf["q"]), dtype=_np.float64)
-            cnrm = pdf["nq"].to_numpy(dtype=_np.float64)
-            clab = pdf["label"].to_numpy(dtype=object)
-            # exact: quantized components <= 1e6, so every product and
-            # 64-term sum is an integer < 2^53 — float64 matmul loses
-            # nothing regardless of BLAS accumulation order. Denominator
-            # mirrors the relational/oracle form sqrt(na_double*nb_double)
-            # op-for-op, so sims are bitwise identical across strategies.
-            sims = (b_qmat @ cmat.T) / _np.sqrt(
-                b_qnrm[:, None] * cnrm[None, :]
-            )
-            sims[b_qids[:, None] == cid[None, :]] = -_np.inf  # self-match
-            # partial top-k per batch under the GLOBAL total order
-            # (sim desc, candidate_id asc): columns pre-sorted by id asc,
-            # then a stable sort on -sim keeps ties id-ascending — so the
-            # union of per-batch top-k provably contains the global top-k.
-            order = _np.argsort(cid, kind="stable")
-            cid_s = cid[order]
-            sims_s = sims[:, order]
-            kept = min(kk, cid_s.shape[0])
-            top = _np.argsort(-sims_s, axis=1, kind="stable")[:, :kept]
-            qi = _np.repeat(_np.arange(nq), kept)
-            ci = top.ravel()
-            s = sims_s[_np.repeat(_np.arange(nq), kept), ci]
-            mask = _np.isfinite(s)  # drop self rows that slipped into top-k
-            yield _pd.DataFrame(
-                {
-                    "query_id": b_qids[qi][mask],
-                    "candidate_id": cid_s[ci][mask],
-                    "query_label": b_qlab[qi][mask],
-                    "candidate_label": clab[order][ci][mask],
-                    "sim": s[mask],
-                }
-            )
-
-    partials = vecs.mapInPandas(score_blocks, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("candidate_id").asc()
-    )
-    return (
-        partials.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= kk)
-        .select(
-            "query_id",
-            "candidate_id",
-            "query_label",
-            "candidate_label",
-            F.round("sim", 6).alias("sim"),
-            "rnk",
-        )
-    )
-
-
-def _knn_topk_relational(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
-    vecs = _quantized_vecs(spark, sf_dir)
-    a = vecs.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("q").alias("qa"),
-        F.col("nq").alias("na"),
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("label").alias("candidate_label"),
-        F.col("q").alias("qb"),
-        F.col("nq").alias("nb"),
-    )
+def _qcos(qa: Column, na: Column, qb: Column, nb: Column) -> Column:
+    """Exact cosine of two quantized vectors with squared norms na, nb: the
+    integer dot product, then one double division by sqrt(na * nb), which
+    is the oracle's expression op for op."""
     dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
+        F.zip_with(qa, qb, lambda x, y: x * y),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    sim = dot.cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
+    return dot.cast("double") / F.sqrt(na.cast("double") * nb.cast("double"))
+
+
+# Gate for the numpy path of _cosine_topk: its query rows are collected and
+# broadcast to executors, so they must be bounded. At this cap the
+# broadcast is <= ~50k queries x 64 int64 ~ 25 MB — the same order as
+# Spark's own broadcast-join threshold. Above it the relational path runs
+# (no driver collect, no broadcast — survives any corpus size; q22's IVF is
+# the sub-quadratic route anyway).
+KNN_NUMPY_MAX_ROWS = 50_000
+
+# (SparkContext, Broadcast) made by the last _cosine_topk call
+_kernel_broadcast: list = []
+
+
+def _cosine_topk(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int,
+    key: str | None = None,
+    bounds: dict | None = None,
+) -> DataFrame:
+    """Exact cosine top-k of each query row over the candidate rows.
+
+    Both inputs are (vec_id, label, q, nq[, key]) frames from
+    _quantized_vecs, which guarantees nq > 0: a zero norm makes the cosine
+    0/0 = NaN, and the two paths below order NaN differently. Returns
+    (query_id, candidate_id, query_label, candidate_label[, key], sim, rnk):
+    for each query its k best candidates (only those with the query's
+    `key` value when a key is given) ranked by (sim desc, candidate_id asc),
+    sim rounded to 6 places. A row is never paired with its own vec_id.
+    With `bounds` ({key value: lower bound}) a pair below its key's bound
+    is dropped, and a key value without a bound keeps no pair.
+
+    Sims are exact and bitwise equal on both paths: quantized components
+    are <= 1e6, so every product and 64-term dot product is an integer
+    < 2^53 in any accumulation order, and the denominator is _qcos's
+    sqrt(na * nb).
+
+    - numpy path (at most KNN_NUMPY_MAX_ROWS query rows, one bounded
+      collect): the query rows, grouped by key, ride one broadcast
+      variable. mapInPandas scores each Arrow batch of candidates with one
+      BLAS matmul per (key, 512-query chunk) — the chunk bounds a task's
+      sims matrix however large a key group is — and keeps a partial
+      top-k in the global order (candidates pre-sorted by id, then a
+      stable argsort on -sim), so the partials hold every query's top-k.
+    - relational path: an equi-join on key, or without one a
+      shuffle-replicated cartesian (each task pairs one query block with
+      one candidate block) — no driver collect, no broadcast of either
+      side.
+
+    One window then ranks the pairs of either path. Each call unpersists
+    the previous call's broadcast — unpersist, not destroy: the driver
+    keeps the value, so a frame still holding it re-ships it.
+    """
+    sc = queries.sparkSession.sparkContext
+    while _kernel_broadcast:
+        owner, prev = _kernel_broadcast.pop()
+        if owner is sc:
+            prev.unpersist()
+    keys = [key] if key else []
+    qrows = (
+        queries.select("vec_id", "label", "q", "nq", *keys)
+        .limit(KNN_NUMPY_MAX_ROWS + 1)
+        .collect()
     )
-    # exact brute-force baseline, but with a SCALE-SAFE join strategy: a
-    # shuffle-replicated cartesian (each task pairs one query block with one
-    # candidate block) instead of broadcasting the entire candidate corpus
-    # to every executor — the broadcast dies at 100 TB, the cartesian
-    # doesn't. q22 is the sub-quadratic IVF route for the same predicate.
-    scored = (
-        a.crossJoin(b.hint("shuffle_replicate_nl"))
-        .filter(F.col("candidate_id") != F.col("query_id"))
-        .withColumn("sim", sim)
-    )
+    if len(qrows) > KNN_NUMPY_MAX_ROWS:
+        a = queries.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("query_label"),
+            F.col("q").alias("qa"),
+            F.col("nq").alias("na"),
+            *keys,
+        )
+        b = candidates.select(
+            F.col("vec_id").alias("candidate_id"),
+            F.col("label").alias("candidate_label"),
+            F.col("q").alias("qb"),
+            F.col("nq").alias("nb"),
+            *keys,
+        )
+        pairs = (
+            a.join(b, key) if key
+            else a.crossJoin(b.hint("shuffle_replicate_nl"))
+        )
+        sim = _qcos(F.col("qa"), F.col("na"), F.col("qb"), F.col("nb"))
+        pairs = pairs.filter(
+            F.col("candidate_id") != F.col("query_id")
+        ).withColumn("sim", sim)
+        if bounds is not None:
+            bound = F.create_map(*[F.lit(x) for kv in bounds.items() for x in kv])
+            pairs = pairs.filter(F.col("sim") >= bound[F.col(key)])
+    else:
+        import numpy as np
+
+        groups: dict = {}
+        for r in qrows:
+            groups.setdefault(r[key] if key else None, []).append(r)
+        payload = {
+            kv: (
+                np.array([r["vec_id"] for r in rows], dtype=np.int64),
+                np.array([r["label"] for r in rows], dtype=object),
+                np.array([r["q"] for r in rows], dtype=np.float64),
+                np.array([r["nq"] for r in rows], dtype=np.float64),
+                -np.inf if bounds is None else bounds[kv],
+            )
+            for kv, rows in groups.items()
+            if bounds is None or kv in bounds
+        }
+        dtypes = dict(candidates.dtypes)
+        schema = ", ".join(
+            [
+                "query_id bigint",
+                "candidate_id bigint",
+                f"query_label {dtypes['label']}",
+                f"candidate_label {dtypes['label']}",
+                *(f"{c} {dtypes[c]}" for c in keys),
+                "sim double",
+            ]
+        )
+        bc = sc.broadcast(payload)
+        _kernel_broadcast.append((sc, bc))
+
+        def score(batches):
+            import numpy as _np
+            import pandas as _pd
+
+            b_payload = bc.value
+            for pdf in batches:
+                for kv, grp in pdf.groupby(key, sort=False) if key else [(None, pdf)]:
+                    if kv not in b_payload or not len(grp):
+                        continue
+                    qid, qlab, qmat, qnq, bound = b_payload[kv]
+                    grp = grp.iloc[_np.argsort(grp["vec_id"].to_numpy(), kind="stable")]
+                    cid = grp["vec_id"].to_numpy(_np.int64)
+                    clab = grp["label"].to_numpy(object)
+                    cmat = _np.array(list(grp["q"]), dtype=_np.float64)
+                    cnq = grp["nq"].to_numpy(_np.float64)
+                    kept = min(k, len(cid))
+                    for lo in range(0, len(qid), 512):
+                        hi = min(lo + 512, len(qid))
+                        sims = (qmat[lo:hi] @ cmat.T) / _np.sqrt(
+                            qnq[lo:hi, None] * cnq[None, :]
+                        )
+                        sims[qid[lo:hi, None] == cid[None, :]] = -_np.inf
+                        top = _np.argsort(-sims, axis=1, kind="stable")[:, :kept]
+                        s = _np.take_along_axis(sims, top, axis=1).ravel()
+                        qi = _np.repeat(_np.arange(lo, hi), kept)
+                        ci = top.ravel()
+                        # -inf marks a self pair; the bound gate keeps a
+                        # sim-desc prefix, so it commutes with the merge
+                        keep = _np.isfinite(s) & (s >= bound)
+                        if not keep.any():
+                            continue
+                        out = {
+                            "query_id": qid[qi][keep],
+                            "candidate_id": cid[ci][keep],
+                            "query_label": qlab[qi][keep],
+                            "candidate_label": clab[ci][keep],
+                        }
+                        if key:
+                            out[key] = kv
+                        out["sim"] = s[keep]
+                        yield _pd.DataFrame(out)
+
+        pairs = candidates.select("vec_id", "label", "q", "nq", *keys).mapInPandas(
+            score, schema=schema
+        )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("candidate_id").asc()
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        pairs.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
             "query_id",
             "candidate_id",
             "query_label",
             "candidate_label",
+            *keys,
             F.round("sim", 6).alias("sim"),
             "rnk",
         )
     )
+
+
+def _knn_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+    """Exact brute-force cosine top-k: every 10th vector queries all."""
+    vecs = _quantized_vecs(spark, sf_dir)
+    return _cosine_topk(vecs.filter(F.col("vec_id") % 10 == 0), vecs, k)
 
 
 def _knn_topk_staged(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -1928,25 +1965,14 @@ FROM fin
 
 def _ivf_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """IVF bucketed ANN: relational centroid assignment (broadcast centroid
-    table, one window), then per-bucket exact top-k. The in-bucket scorer
-    has two strategies under one contract (same split as q38/_knn_topk):
-
-    - per-bucket numpy matmul under KNN_NUMPY_MAX_ROWS: a query's
-      candidate set is EXACTLY its bucket, so one applyInPandas over the
-      bucket groups computes the final gated top-k directly — one BLAS
-      matmul per (bucket, query-chunk), no 4M-row pair join, no window.
-      Exact: integer-valued float64 products < 2^53, denominator
-      op-for-op the relational sqrt, stable argsort over candidates
-      pre-sorted by id reproduces the (sim desc, candidate_id asc)
-      window order, self-matches excluded via -inf like _knn_topk_numpy.
-      Replaces ~|bucket|^2 interpreted aggregate-HOF dot products
-      (guide §4.2): measured ~22 s -> ~6 s at sf1.0.
-    - the relational bucket join above the gate (shuffles, never collects).
-    """
-    assigned = _ivf_assigned(spark, sf_dir)
-    if _table_rows(sf_dir, "embeddings") <= KNN_NUMPY_MAX_ROWS:
-        return _ivf_score_numpy(assigned, k)
-    return _ivf_score_relational(assigned, k)
+    table, one window), then the exact top-k of every 10th vector within
+    its bucket — _cosine_topk keyed on the bucket. The assignment is
+    locally checkpointed so it runs once, not once for the kernel's query
+    collect and again for its candidate scan."""
+    assigned = _ivf_assigned(spark, sf_dir).localCheckpoint()
+    return _cosine_topk(
+        assigned.filter(F.col("vec_id") % 10 == 0), assigned, k, key="bucket"
+    ).select("query_id", "candidate_id", "rnk", "sim")
 
 
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1970,14 +1996,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x,
     )
     cent = cent.withColumn("ncq", ncq)
-    dot_c = F.aggregate(
-        F.zip_with(F.col("q"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sim_c = dot_c.cast("double") / F.sqrt(
-        F.col("nq").cast("double") * F.col("ncq").cast("double")
-    )
+    sim_c = _qcos(F.col("q"), F.col("nq"), F.col("cq"), F.col("ncq"))
     wc = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("c_label").asc()
     )
@@ -1987,107 +2006,6 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("crn", F.row_number().over(wc))
         .filter(F.col("crn") == 1)
         .select("vec_id", "label", "q", "nq", F.col("c_label").alias("bucket"))
-    )
-
-
-def _ivf_score_numpy(assigned: DataFrame, k: int) -> DataFrame:
-    out_schema = "query_id bigint, candidate_id bigint, rnk int, sim double"
-    kk = int(k)
-
-    def score(pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        cid = pdf["vec_id"].to_numpy(_np.int64)
-        order = _np.argsort(cid, kind="stable")
-        cid = cid[order]
-        cmat = _np.array(list(pdf["q"]), dtype=_np.float64)[order]
-        cnq = pdf["nq"].to_numpy(_np.float64)[order]
-        is_q = cid % 10 == 0
-        qid = cid[is_q]
-        if not len(qid):
-            return _pd.DataFrame(
-                {"query_id": [], "candidate_id": [], "rnk": [], "sim": []}
-            ).astype(
-                {"query_id": "int64", "candidate_id": "int64",
-                 "rnk": "int32", "sim": "float64"}
-            )
-        qmat, qnq = cmat[is_q], cnq[is_q]
-        outs = []
-        # chunk the query rows so the sims matrix stays bounded
-        # (<= 512 x |bucket| float64) no matter how big the bucket is
-        for lo in range(0, len(qid), 512):
-            hi = min(lo + 512, len(qid))
-            sims = (qmat[lo:hi] @ cmat.T) / _np.sqrt(
-                qnq[lo:hi, None] * cnq[None, :]
-            )
-            sims[qid[lo:hi, None] == cid[None, :]] = -_np.inf  # self-match
-            kept = min(kk + 1, cid.shape[0])
-            top = _np.argsort(-sims, axis=1, kind="stable")[:, :kept]
-            s = _np.take_along_axis(sims, top, axis=1)
-            finite = _np.isfinite(s)
-            rnk = _np.cumsum(finite, axis=1)  # rank among non-self rows
-            keep = (finite & (rnk <= kk)).ravel()
-            if not keep.any():
-                continue
-            m = hi - lo
-            qi = _np.repeat(_np.arange(lo, hi), kept)
-            outs.append(
-                _pd.DataFrame(
-                    {
-                        "query_id": qid[qi][keep],
-                        "candidate_id": cid[top.ravel()][keep],
-                        "rnk": rnk.ravel()[keep].astype(_np.int32),
-                        "sim": s.ravel()[keep],
-                    }
-                )
-            )
-        if not outs:
-            return _pd.DataFrame(
-                {"query_id": [], "candidate_id": [], "rnk": [], "sim": []}
-            ).astype(
-                {"query_id": "int64", "candidate_id": "int64",
-                 "rnk": "int32", "sim": "float64"}
-            )
-        return _pd.concat(outs, ignore_index=True)
-
-    scored = assigned.groupBy("bucket").applyInPandas(score, schema=out_schema)
-    return scored.select(
-        "query_id", "candidate_id", "rnk", F.round("sim", 6).alias("sim")
-    )
-
-
-def _ivf_score_relational(assigned: DataFrame, k: int) -> DataFrame:
-    a = assigned.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("nq").alias("na"),
-        "bucket",
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("q").alias("qb"),
-        F.col("nq").alias("nb"),
-        "bucket",
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sim = dot.cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("candidate_id").asc()
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("candidate_id") != F.col("query_id"))
-        .withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "candidate_id", "rnk", F.round("sim", 6).alias("sim"))
     )
 
 
@@ -3026,176 +2944,31 @@ _Q38_BOUNDS = {"Occupation": 0.0, "Skill": 0.7, "Qualification": 0.8}
 
 
 def q38_entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity->taxonomy linking. Two physical strategies, same contract:
-
-    - numpy block matmul (corpus <= KNN_NUMPY_MAX_ROWS): the entity side
-      (every 10th vector — the same 10% the exact-kNN path broadcasts) is
-      collected per type and each Arrow batch of the taxonomy side is
-      scored with one BLAS matmul per type + per-batch gated top-4; a
-      final window merges partials. Exact: integer-valued float64
-      products/sums stay < 2^53 and the denominator mirrors the relational
-      sqrt(na_double * nb_double) op-for-op, so sims are bitwise identical.
-      Replaces a BroadcastNestedLoopJoin whose per-pair dot product ran as
-      an interpreted aggregate-HOF (guide §4.2 — hand whole batches to
-      native code): measured 130.8 s -> ~4 s at sf1.0.
-    - the relational join above the gate (no driver collect; survives any
-      corpus size).
-    """
-    if _table_rows(sf_dir, "embeddings") <= KNN_NUMPY_MAX_ROWS:
-        return _entity_linking_numpy(spark, sf_dir)
-    return _entity_linking_relational(spark, sf_dir)
-
-
-def _q38_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entity->taxonomy linking: every 10th vector is an entity, the rest
+    are the taxonomy; an entity links to its 4 best taxonomy rows of the
+    same entity type whose cosine clears that type's bound. The scoring is
+    _cosine_topk keyed on entity_type (numpy block matmul under its gate:
+    130.8 s -> ~4 s at sf1.0 against the old interpreted-HOF join)."""
     vecs = _quantized_vecs(spark, sf_dir)
-    etype = (
+    typed = vecs.withColumn(
+        "entity_type",
         F.when(F.col("label") % 3 == 0, F.lit("Occupation"))
         .when(F.col("label") % 3 == 1, F.lit("Skill"))
-        .otherwise(F.lit("Qualification"))
+        .otherwise(F.lit("Qualification")),
     )
-    return vecs.withColumn("entity_type", etype)
-
-
-def _entity_linking_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    typed = _q38_typed(spark, sf_dir)
-    erows = (
-        typed.filter(F.col("vec_id") % 10 == 0)
-        .select("vec_id", "entity_type", "q", "nq")
-        .collect()
-    )
-    out_schema = (
-        "entity_id bigint, entity_type string, tax_id bigint, sim double"
-    )
-    if not erows:
-        return arrow_frame(spark, [], out_schema + ", rnk int").select(
-            "entity_id", "entity_type", "tax_id",
-            F.round("sim", 6).alias("sim"), "rnk",
-        )
-    by_type: dict[str, list] = {}
-    for r in erows:
-        by_type.setdefault(r["entity_type"], []).append(r)
-    payload = {}
-    for et, rows in by_type.items():
-        payload[et] = (
-            np.array([r["vec_id"] for r in rows], dtype=np.int64),
-            np.array([r["q"] for r in rows], dtype=np.float64),
-            np.array([r["nq"] for r in rows], dtype=np.float64),
-        )
-    bc = spark.sparkContext.broadcast((payload, dict(_Q38_BOUNDS)))
-
-    def score(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        b_payload, b_bounds = bc.value
-        for pdf in batches:
-            for et, grp in pdf.groupby("entity_type"):
-                if et not in b_payload or not len(grp):
-                    continue
-                eids, emat, enq = b_payload[et]
-                cid = grp["vec_id"].to_numpy(dtype=_np.int64)
-                cmat = _np.array(list(grp["q"]), dtype=_np.float64)
-                cnq = grp["nq"].to_numpy(dtype=_np.float64)
-                # candidates pre-sorted by tax_id asc so the stable sort on
-                # -sim breaks float ties exactly like the relational
-                # window's tax_id ASC tie-break
-                order = _np.argsort(cid, kind="stable")
-                cid_s = cid[order]
-                sims = (emat @ cmat[order].T) / _np.sqrt(
-                    enq[:, None] * cnq[None, :]
-                )
-                m = len(eids)
-                kept = min(4, cid_s.shape[0])
-                top = _np.argsort(-sims, axis=1, kind="stable")[:, :kept]
-                qi = _np.repeat(_np.arange(m), kept)
-                ci = top.ravel()
-                s = sims[qi, ci]
-                # the >= bound gate commutes with ranking (gated rows are a
-                # sim-desc prefix), so applying it per batch only drops
-                # rows the final filter would drop anyway
-                mask = s >= b_bounds.get(et, 0.0)
-                if not mask.any():
-                    continue
-                yield _pd.DataFrame(
-                    {
-                        "entity_id": eids[qi][mask],
-                        "entity_type": et,
-                        "tax_id": cid_s[ci][mask],
-                        "sim": s[mask],
-                    }
-                )
-
-    partials = (
-        typed.filter(F.col("vec_id") % 10 != 0)
-        .select("vec_id", "entity_type", "q", "nq")
-        .mapInPandas(score, schema=out_schema)
-    )
-    w = Window.partitionBy("entity_id", "entity_type").orderBy(
-        F.col("sim").desc(), F.col("tax_id").asc()
-    )
-    return (
-        partials.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 4)
-        .select(
-            "entity_id", "entity_type", "tax_id",
-            F.round("sim", 6).alias("sim"), "rnk",
-        )
-    )
-
-
-def _entity_linking_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _quantized_vecs(spark, sf_dir)
-    etype = (
-        F.when(F.col("label") % 3 == 0, F.lit("Occupation"))
-        .when(F.col("label") % 3 == 1, F.lit("Skill"))
-        .otherwise(F.lit("Qualification"))
-    )
-    typed = vecs.withColumn("entity_type", etype)
-    a = typed.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("entity_id"),
-        F.col("q").alias("qa"),
-        F.col("nq").alias("na"),
+    is_entity = F.col("vec_id") % 10 == 0
+    return _cosine_topk(
+        typed.filter(is_entity),
+        typed.filter(~is_entity),
+        4,
+        key="entity_type",
+        bounds=_Q38_BOUNDS,
+    ).select(
+        F.col("query_id").alias("entity_id"),
         "entity_type",
-    )
-    b = typed.filter(F.col("vec_id") % 10 != 0).select(
-        F.col("vec_id").alias("tax_id"),
-        F.col("q").alias("qb"),
-        F.col("nq").alias("nb"),
-        "entity_type",
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sim = dot.cast("double") / F.sqrt(
-        F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    bound = (
-        F.when(F.col("entity_type") == "Occupation", F.lit(0.0))
-        .when(F.col("entity_type") == "Skill", F.lit(0.7))
-        .otherwise(F.lit(0.8))
-    )
-    # entity-type routing join = the reference's per-type vector stores;
-    # the taxonomy side is the broadcast dim side at real scale
-    w = Window.partitionBy("entity_id", "entity_type").orderBy(
-        F.col("sim").desc(), F.col("tax_id").asc()
-    )
-    return (
-        a.join(F.broadcast(b), "entity_type")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= bound)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 4)
-        .select(
-            "entity_id",
-            "entity_type",
-            "tax_id",
-            F.round("sim", 6).alias("sim"),
-            "rnk",
-        )
+        F.col("candidate_id").alias("tax_id"),
+        "sim",
+        "rnk",
     )
 
 

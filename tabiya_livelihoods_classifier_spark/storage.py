@@ -54,7 +54,8 @@ def params_hash(*parts: object) -> str:
 # Commit-time lineage reads parquet footers on the driver (metadata only,
 # ~ms per file) up to this many output files; beyond it the commit falls
 # back to the distributed input_file_name aggregate. Bounds the driver
-# loop the same way KNN_NUMPY_MAX_ROWS bounds the exact-kNN collect.
+# loop the same way KNN_NUMPY_MAX_ROWS bounds the query rows the top-k
+# kernel collects.
 FOOTER_LINEAGE_MAX_FILES = 4096
 
 

@@ -1,15 +1,35 @@
 """Physical-plan assertions: the battery queries must compile to the
 join/scan shapes that survive a 100x scale-up (no full-corpus broadcast,
-column pruning at the parquet scan)."""
+column pruning at the parquet scan). For the callers of the exact-cosine
+top-k kernel (q20/q21/q22/q38/q41) also: numpy == relational row parity,
+the DuckDB oracle on both paths, and the kernel's broadcast lifetime."""
 
 from __future__ import annotations
 
 import contextlib
+import importlib.util
 import io
+import sys
+from pathlib import Path
 
-from tabiya_livelihoods_classifier_spark.plans.queries import QUERIES
+import duckdb
+import pytest
+from pyspark import SparkContext
+from pyspark.broadcast import Broadcast
+
+from tabiya_livelihoods_classifier_spark.plans import queries as Q
+from tabiya_livelihoods_classifier_spark.plans.queries import ORACLE_SQL, QUERIES
 
 SF = "/root/testdata/sf0.001"
+SF01 = str(Path(SF).with_name("sf0.1"))
+TOOLS = Path(__file__).resolve().parents[1] / "tools"
+
+
+def _tool(name: str):
+    spec = importlib.util.spec_from_file_location(name, TOOLS / f"{name}.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def _plan(df) -> str:
@@ -34,30 +54,36 @@ def test_q20_small_corpus_exact_scorer_is_arrow_block_matmul(spark):
     assert "BroadcastNestedLoopJoin" not in p, p
 
 
-def test_knn_relational_fallback_is_shuffle_cartesian(spark):
+def test_knn_relational_fallback_is_shuffle_cartesian(spark, monkeypatch):
     """Above the numpy gate the relational fallback runs, and it must not
     broadcast the candidate corpus: the scale-safe strategy is a
     shuffle-replicated cartesian."""
-    from tabiya_livelihoods_classifier_spark.plans.queries import (
-        _knn_topk_relational,
-    )
-
-    p = _plan(_knn_topk_relational(spark, SF, 5))
+    monkeypatch.setattr(Q, "KNN_NUMPY_MAX_ROWS", 0)
+    p = _plan(Q._knn_topk(spark, SF, 5))
     assert "CartesianProduct" in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
 
 
-def test_knn_numpy_matches_relational(spark):
-    """The two exact-kNN physical strategies are one contract: identical
-    rows (ranks, labels, and bitwise-identical rounded sims) at sf0.001."""
-    from tabiya_livelihoods_classifier_spark.plans.queries import (
-        _knn_topk_numpy,
-        _knn_topk_relational,
-    )
+# every caller of the top-k kernel, as (id, producer frame)
+_TOPK_CALLERS = {
+    "knn_k5": lambda s, d: Q._knn_topk(s, d, 5),
+    "knn_k32": lambda s, d: Q._knn_topk(s, d, 32),
+    "ivf": lambda s, d: Q._ivf_topk(s, d, 5),
+    "q38": Q.q38_entity_linking,
+}
 
-    a = sorted(map(tuple, _knn_topk_numpy(spark, SF, 5).collect()))
-    b = sorted(map(tuple, _knn_topk_relational(spark, SF, 5).collect()))
-    assert a == b
+
+@pytest.mark.parametrize("sf", [SF, SF01], ids=["sf0.001", "sf0.1"])
+@pytest.mark.parametrize("caller", list(_TOPK_CALLERS))
+def test_topk_numpy_matches_relational(spark, monkeypatch, caller, sf):
+    """The kernel's two physical paths are one contract for every caller:
+    identical rows (ids, labels, types, ranks and bitwise-identical rounded
+    sims)."""
+    build = _TOPK_CALLERS[caller]
+    a = sorted(map(tuple, build(spark, sf).collect()))
+    monkeypatch.setattr(Q, "KNN_NUMPY_MAX_ROWS", 0)
+    b = sorted(map(tuple, build(spark, sf).collect()))
+    assert a and a == b
 
 
 def test_q20_large_corpus_routes_through_ivf(spark):
@@ -65,7 +91,7 @@ def test_q20_large_corpus_routes_through_ivf(spark):
     equi-join on bucket — no cartesian over the corpus. (sf0.1's 2000
     embeddings exceed ANN_EXACT_MAX_ROWS=1000.) The only crossJoin is the
     per-vector centroid assignment against the broadcast centroid table."""
-    p = _plan(QUERIES["q20_ann_topk"](spark, "/root/testdata/sf0.1"))
+    p = _plan(QUERIES["q20_ann_topk"](spark, SF01))
     assert "CartesianProduct" not in p, p
 
 
@@ -108,28 +134,86 @@ def test_q01_scan_prunes_columns(spark):
     assert any("l_returnflag" in ln for ln in read_schemas), read_schemas
 
 
-def test_q38_numpy_matches_relational(spark):
-    """The two entity-linking physical strategies are one contract:
-    identical rows (types, tax ids, and bitwise-identical rounded sims)
-    at sf0.001 — the same parity bar as the exact-kNN pair."""
-    from tabiya_livelihoods_classifier_spark.plans.queries import (
-        _entity_linking_numpy,
-        _entity_linking_relational,
-    )
-
-    a = sorted(map(tuple, _entity_linking_numpy(spark, SF).collect()))
-    b = sorted(map(tuple, _entity_linking_relational(spark, SF).collect()))
-    assert a == b
-
-
 def test_q38_numpy_plan_has_no_join(spark):
     """Under the gate the linking scorer is mapInPandas over the taxonomy
     side with the entity matrices on a broadcast variable — no join node,
     no corpus broadcast relation."""
-    from tabiya_livelihoods_classifier_spark.plans.queries import (
-        _entity_linking_numpy,
-    )
-
-    p = _plan(_entity_linking_numpy(spark, SF))
+    p = _plan(Q.q38_entity_linking(spark, SF))
     assert "MapInPandas" in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
+
+
+# the top-k kernel's consumers, checked against their DuckDB oracles; at
+# sf0.1 q20 takes its IVF branch
+_TOPK_ORACLE = [
+    *((name, SF) for name in (
+        "q20_ann_topk", "q21_knn_ir_metrics", "q22_ann_ivf",
+        "q38_entity_linking", "q41_ir_multi_k",
+    )),
+    ("q20_ann_topk", SF01),
+    ("q22_ann_ivf", SF01),
+]
+
+
+@pytest.mark.parametrize("path", ["numpy", "relational"])
+@pytest.mark.parametrize(
+    "name,sf", _TOPK_ORACLE, ids=[f"{n[:3]}-{Path(d).name}" for n, d in _TOPK_ORACLE]
+)
+def test_topk_queries_match_oracle(spark, monkeypatch, tmp_path, name, sf, path):
+    """Rows, columns and value multisets equal the oracle's on both kernel
+    paths. Stage keys do not include the stage root, so each case gets its
+    own root: a stage committed by the other path is never read back."""
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path))
+    if path == "relational":
+        monkeypatch.setattr(Q, "KNN_NUMPY_MAX_ROWS", 0)
+    normalize = _tool("check_queries").normalize
+    df = QUERIES[name](spark, sf)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    rel = con.execute(ORACLE_SQL[name])
+    ocols = [d[0] for d in rel.description]
+    assert sorted(df.columns) == sorted(ocols)
+    got = normalize(df.collect(), df.columns)
+    assert got and got == normalize(rel.fetchall(), ocols)
+
+
+def test_kernel_unpersists_the_previous_broadcast(spark, monkeypatch):
+    """Each kernel call unpersists the broadcast of the call before it, and
+    a frame whose broadcast was unpersisted still evaluates (the driver
+    keeps the value and re-ships it)."""
+    made, dropped = [], []
+    broadcast, unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def spy_broadcast(self, value):
+        made.append(broadcast(self, value))
+        return made[-1]
+
+    def spy_unpersist(self, blocking=False):
+        dropped.append(self)
+        return unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy_broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", spy_unpersist)
+    first = Q.q38_entity_linking(spark, SF)
+    rows = sorted(first.collect())
+    assert len(made) == 1 and made[0] not in dropped
+    dropped.clear()
+    Q.q38_entity_linking(spark, SF)
+    assert dropped == [made[0]] and len(made) == 2
+    assert sorted(first.collect()) == rows
+
+
+def test_explain_tool_captures_kernel_plans(spark, monkeypatch, tmp_path):
+    """tools/explain_query still resolves the kernel's callers, and under
+    the gate each captured plan is the mapInPandas scorer with no
+    nested-loop or cartesian join."""
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stages"))
+    names = ["knn_plan", "q22_plan", "q38_entity_linking"]
+    argv = ["explain_query.py", str(tmp_path), "cap", SF, *names]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert _tool("explain_query").main() == 0
+    for name in names:
+        p = (tmp_path / f"{name}_cap.txt").read_text()
+        assert "MapInPandas" in p, p
+        assert "BroadcastNestedLoopJoin" not in p, p
+        assert "CartesianProduct" not in p, p
