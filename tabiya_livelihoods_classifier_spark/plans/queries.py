@@ -20,11 +20,13 @@ functions/text.py + operators/blocking.py semantics exactly.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tabiya_livelihoods_classifier_spark.config import IR_KS as IR_K_GRID
 from tabiya_livelihoods_classifier_spark.functions.text import (
     canonicalize_text,
     shingles,
@@ -34,6 +36,7 @@ from tabiya_livelihoods_classifier_spark.operators.blocking import (
     minhash_signature,
 )
 from tabiya_livelihoods_classifier_spark.session import arrow_frame, ensure_session
+from tabiya_livelihoods_classifier_spark.storage import StageStore, params_hash
 
 # --------------------------------------------------------------------------
 # table access
@@ -466,14 +469,7 @@ def _fanout_partitions(
     session and a 0.6 MB corpus, a fixed defaultParallelism fan-out made
     EVERY downstream stage (stage write, lineage scan, grouped aggregates)
     pay 32-96 task launches to move kilobytes."""
-    from pathlib import Path as _Path
-
-    src = _Path(sf_dir) / f"{table}.parquet"
-    nbytes = (
-        sum(f.stat().st_size for f in src.rglob("*") if f.is_file())
-        if src.is_dir()
-        else (src.stat().st_size if src.exists() else 0)
-    )
+    nbytes = _corpus_bytes(sf_dir, table)
     cores = spark.sparkContext.defaultParallelism
     return max(1, min(cores, -(-nbytes // per_task_bytes)))
 
@@ -568,16 +564,6 @@ def _with_shingles(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _stage_store(spark: SparkSession):
-    """Battery-scoped StageStore (bench.py wipes the root per run)."""
-    import os as _os
-
-    from tabiya_livelihoods_classifier_spark.storage import StageStore
-
-    root = _os.environ.get("SPARK_GRAFT_STAGE_DIR", "/tmp/spark_graft_stages")
-    return StageStore(spark, root)
-
-
 def _corpus_bytes(sf_dir: str, table: str = "documents") -> int:
     from pathlib import Path as _Path
 
@@ -594,23 +580,29 @@ def _corpus_mtime(sf_dir: str, table: str = "documents") -> int:
     return src.stat().st_mtime_ns if src.exists() else 0
 
 
-def _shingled_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenized + shingled perturbed corpus, materialized ONCE per
-    (corpus, params) through storage.StageStore. The regex tokenize +
-    3-shingle pass is the dominant cost of the whole similarity family
-    (q12 consumes the frame from 2 plan branches, q13 from 1, the q14 LSH
-    stage from 2) — without the stage each branch re-runs it. Reading the
-    committed snapshot costs one column-pruned parquet scan per branch and
-    is durable across executor loss."""
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
+def _staged(
+    spark: SparkSession, sf_dir: str, name: str, params: tuple,
+    build: Callable[[], DataFrame], table: str = "documents",
+) -> DataFrame:
+    """Commit `build()` once per (name, corpus, params) in the battery's
+    StageStore ($SPARK_GRAFT_STAGE_DIR; bench.py wipes it per run) and
+    serve the snapshot to every later consumer. The key chains the source
+    table's path and mtime, so a changed input or parameter rebuilds
+    instead of serving a stale stage. A snapshot is also a durable
+    barrier: reading it survives executor loss, a localCheckpoint does
+    not."""
+    ph = params_hash(name, str(sf_dir), _corpus_mtime(sf_dir, table), *params)
+    root = os.environ.get("SPARK_GRAFT_STAGE_DIR", "/tmp/spark_graft_stages")
+    return StageStore(spark, root).staged(f"{name}_{ph}", ph, build)
 
-    ph = params_hash("shingles_v2", str(sf_dir), _corpus_mtime(sf_dir), 3)
-    stage = f"shingles_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    return store.commit(
-        stage, _with_shingles(_perturbed_corpus(spark, sf_dir)), ph
+
+def _shingled_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tokenized + shingled perturbed corpus. The regex tokenize +
+    3-shingle pass is the dominant cost of the similarity family: q12
+    reads it from 2 plan branches, q13 from 1, the q14 LSH stage from 2."""
+    return _staged(
+        spark, sf_dir, "shingles_v2", (3,),
+        lambda: _with_shingles(_perturbed_corpus(spark, sf_dir)),
     )
 
 
@@ -746,13 +738,16 @@ def _jaccard_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (keeps more), and a capped nh (= 4095 sentinel) skips the prune for
     # that pair outright. Survivors then pay the exact hot-array intersect
     # join; exact jaccard is computed from the UNCAPPED stats columns, so
-    # emitted rows are bit-identical to the unpruned plan.
+    # emitted rows are bit-identical to the unpruned plan. The id field has
+    # 39 bits, so an id outside [0, 2^39) fails the query instead of
+    # silently aliasing another doc's key.
     nh = F.size(F.array_intersect("sh", F.coalesce("hot_g", empty)))
-    packed = (
+    packed = F.when(
+        F.col("doc_id").between(0, (1 << 39) - 1),
         F.col("doc_id") * F.lit(1 << 24).cast("long")
         + F.least(F.col("n"), F.lit(4095)).cast("long") * F.lit(4096).cast("long")
-        + F.least(nh, F.lit(4095)).cast("long")
-    )
+        + F.least(nh, F.lit(4095)).cast("long"),
+    ).otherwise(F.raise_error(F.lit("q12 pair key: doc_id outside [0, 2^39)")))
     pex = (
         sh.filter(F.col("n") > 0)
         .crossJoin(F.broadcast(hot_one))
@@ -876,17 +871,10 @@ def q12_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_with_shingles), the hot-shingle set comes from a count aggregate
     whose shuffle is vocabulary-sized, and the doc-list grouping has a
     single consumer — the whole query is one Spark job plus the commit."""
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
-
-    ph = params_hash(
-        "jaccard_pairs_v2", str(sf_dir), _corpus_mtime(sf_dir),
-        SHINGLE_DF_CAP, 0.5,
+    return _staged(
+        spark, sf_dir, "jaccard_pairs_v2", (SHINGLE_DF_CAP, 0.5),
+        lambda: _jaccard_pairs_plan(spark, sf_dir),
     )
-    stage = f"jaccard_pairs_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    return store.commit(stage, _jaccard_pairs_plan(spark, sf_dir), ph)
 
 
 Q12_SQL = f"""
@@ -960,21 +948,14 @@ def _minhash_sig_relational(
 
 
 def _minhash_sig_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 16-permutation MinHash signature frame, staged once per
-    (corpus, params): q13 emits it and q14's band membership groups it —
-    round 6 ran the explode + 16-way min aggregate twice per battery
-    (guide §1.2: don't compute things twice)."""
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
-
-    ph = params_hash(
-        "minhash_sig_v1", str(sf_dir), _corpus_mtime(sf_dir), 16
+    """The 16-permutation MinHash signature frame: q13 emits it and q14's
+    band membership groups it."""
+    return _staged(
+        spark, sf_dir, "minhash_sig_v1", (16,),
+        lambda: _minhash_sig_relational(
+            spark, _shingled_staged(spark, sf_dir), 16
+        ),
     )
-    stage = f"minhash_sig_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    sh = _shingled_staged(spark, sf_dir)
-    return store.commit(stage, _minhash_sig_relational(spark, sh, 16), ph)
 
 
 def q13_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1077,28 +1058,11 @@ def _lsh_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_pairs_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup pair stage, materialized at most ONCE per (corpus,
-    params) through storage.StageStore and shared by every consumer (q14
-    emits it; q44 clusters it) — a battery run pays the LSH pipeline once,
-    not once per consumer. The committed parquet is also the durable
-    barrier that used to be a localCheckpoint in q44: reading a snapshot
-    survives executor loss, localCheckpoint does not (VERDICT r3 #3).
-
-    The stage key chains the corpus identity (sf_dir + documents.parquet
-    mtime) with every parameter of the pair plan, so a changed input or
-    config recomputes instead of serving stale pairs. bench.py wipes the
-    stage root at battery start so timings never credit a previous run.
-    """
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
-
-    ph = params_hash(
-        "lsh_pairs_v1", str(sf_dir), _corpus_mtime(sf_dir), 16, 2, 0.6
+    """The near-dup pair set: q14 emits it, q26/q44 cluster it."""
+    return _staged(
+        spark, sf_dir, "lsh_pairs_v1", (16, 2, 0.6),
+        lambda: _lsh_pairs_plan(spark, sf_dir),
     )
-    stage = f"lsh_pairs_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    return store.commit(stage, _lsh_pairs_plan(spark, sf_dir), ph)
 
 
 def q14_lsh_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,24 +1649,14 @@ def _knn_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
 
 
 def _knn_topk_staged(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """The exact brute-force kNN ranking at kmax = max(IR_KS), staged once
-    per (corpus, params) and shared by every exact-kNN consumer (q20's
-    small-N branch at k=5, q21 at k=5, q41 at the full grid): a window
-    rank is independent of the cutoff, so smaller-k consumers just filter
-    rnk <= k on the committed snapshot instead of re-running the
-    O(Q x C) scoring pass."""
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
-
+    """The exact brute-force kNN ranking at kmax = max(IR_KS), shared by
+    q20's small-N branch, q21 and q41: a rank does not depend on the
+    cutoff, so a smaller k filters rnk <= k on the snapshot."""
     kmax = max(IR_K_GRID)
-    ph = params_hash(
-        "knn_topk_v1", str(sf_dir), _corpus_mtime(sf_dir, "embeddings"), kmax
+    df = _staged(
+        spark, sf_dir, "knn_topk_v1", (kmax,),
+        lambda: _knn_topk(spark, sf_dir, kmax), table="embeddings",
     )
-    stage = f"knn_topk_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        df = store.read(stage)
-    else:
-        df = store.commit(stage, _knn_topk(spark, sf_dir, kmax), ph)
     return df.filter(F.col("rnk") <= k) if k < kmax else df
 
 
@@ -1803,14 +1757,12 @@ def _nrel_per_query(vecs: DataFrame) -> DataFrame:
     )
 
 
-def q21_knn_ir_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IR metric aggregation (A10: evaluator.py:68-161) at k=5 over the kNN
-    results, relevance = same label. All per-query metric values are cast to
-    DECIMAL(18,12) before averaging so cross-engine sums are exact."""
-    topk = _knn_topk_staged(spark, sf_dir, 5)
-    rel = topk.withColumn(
-        "rel", (F.col("query_label") == F.col("candidate_label")).cast("int")
-    )
+def _ir_per_query(spark: SparkSession, sf_dir: str, fan: DataFrame) -> DataFrame:
+    """Per-(k, query) IR metrics (A10: evaluator.py:68-161) over `fan`'s
+    (k, query_id, rnk, rel) rows with rnk <= k: acc1 (hit at rank 1), acc
+    (hit in the top k), hits, n_rel, rr, ndcg, ap and recall. Every
+    per-query value is cast to DECIMAL(18,12) before averaging so
+    cross-engine sums are exact."""
     # total relevant per query in full candidate pool (for recall/ndcg):
     # the RAW embeddings table, matching the oracle's `FROM embeddings`
     # nrel CTE — the relevance pool deliberately includes zero-norm vectors
@@ -1820,71 +1772,66 @@ def q21_knn_ir_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram.
     nrel = _nrel_per_query(load(spark, sf_dir, "embeddings"))
     dec = "decimal(18,12)"
+    zero = F.lit(0).cast(dec)
+    hit = F.col("rel") == 1
     cum_w = (
-        Window.partitionBy("query_id")
+        Window.partitionBy("k", "query_id")
         .orderBy("rnk")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    rel = rel.withColumn("cum_rel", F.sum("rel").over(cum_w))
     per_q = (
-        rel.groupBy("query_id")
+        fan.withColumn("cum_rel", F.sum("rel").over(cum_w))
+        .groupBy("k", "query_id")
         .agg(
             F.max(F.when(F.col("rnk") == 1, F.col("rel"))).alias("acc1"),
+            F.max("rel").alias("acc"),
             F.sum("rel").alias("hits"),
-            F.min(F.when(F.col("rel") == 1, F.col("rnk"))).alias("first_rel"),
+            F.min(F.when(hit, F.col("rnk"))).alias("first_rel"),
             F.sum(
-                F.when(
-                    F.col("rel") == 1,
-                    (F.lit(1.0) / F.log2(F.col("rnk") + 1)).cast(dec),
-                ).otherwise(F.lit(0).cast(dec))
+                F.when(hit, (F.lit(1.0) / F.log2(F.col("rnk") + 1)).cast(dec))
+                .otherwise(zero)
             ).alias("dcg"),
             F.sum(
-                F.when(
-                    F.col("rel") == 1,
-                    (F.col("cum_rel").cast("double") / F.col("rnk")).cast(dec),
-                ).otherwise(F.lit(0).cast(dec))
+                F.when(hit, (F.col("cum_rel").cast("double") / F.col("rnk")).cast(dec))
+                .otherwise(zero)
             ).alias("ap_num"),
         )
         .join(nrel, "query_id", "left")
         .na.fill({"n_rel": 0})
     )
-    # idcg for m ideal hits = sum_{i=1..min(m,5)} 1/log2(i+1): computed
-    # RELATIONALLY from a rank-discount table with a cumulative window (no
-    # hardcoded case constants), joined on the capped relevant count.
-    idcg_tab = _idcg_table(spark, 5)
-    per_q = per_q.join(
-        F.broadcast(idcg_tab),
-        F.least(F.col("n_rel"), F.lit(5)) == idcg_tab.r,
-        "left",
-    )
-    idcg_col = F.col("idcg").cast("double")
-    per_q = per_q.select(
+    # idcg for m ideal hits = sum_{i=1..min(m,k)} 1/log2(i+1), joined on
+    # the capped relevant count; prefix sums do not depend on kmax, so one
+    # table serves every k
+    idcg_tab = _idcg_table(spark, max(IR_K_GRID))
+    ideal = F.least(F.col("n_rel"), F.col("k"))
+    per_q = per_q.join(F.broadcast(idcg_tab), ideal == idcg_tab.r, "left")
+
+    def ratio(num: Column, den: Column) -> Column:
+        return F.coalesce((num.cast("double") / den.cast("double")).cast(dec), zero)
+
+    return per_q.select(
+        "k",
         "query_id",
         F.coalesce(F.col("acc1"), F.lit(0)).alias("acc1"),
+        "acc",
         "hits",
-        F.col("n_rel"),
-        F.coalesce(
-            (F.lit(1.0) / F.col("first_rel")).cast(dec), F.lit(0).cast(dec)
-        ).alias("rr"),
-        F.coalesce(
-            (F.col("dcg").cast("double") / idcg_col).cast(dec),
-            F.lit(0).cast(dec),
-        ).alias("ndcg"),
-        F.coalesce(
-            (
-                F.col("ap_num").cast("double")
-                / F.least(F.col("n_rel"), F.lit(5)).cast("double")
-            ).cast(dec),
-            F.lit(0).cast(dec),
-        ).alias("ap"),
-        F.coalesce(
-            (
-                F.col("hits").cast("double") / F.col("n_rel").cast("double")
-            ).cast(dec),
-            F.lit(0).cast(dec),
-        ).alias("recall"),
+        "n_rel",
+        ratio(F.lit(1.0), F.col("first_rel")).alias("rr"),
+        ratio(F.col("dcg"), F.col("idcg")).alias("ndcg"),
+        ratio(F.col("ap_num"), ideal).alias("ap"),
+        ratio(F.col("hits"), F.col("n_rel")).alias("recall"),
     )
-    return per_q.agg(
+
+
+def q21_knn_ir_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IR metric aggregation at k=5 over the kNN results, relevance = same
+    label: q41's per-query frame at the single cutoff 5."""
+    rel = (F.col("query_label") == F.col("candidate_label")).cast("int")
+    fan = _knn_topk_staged(spark, sf_dir, 5).select(
+        F.lit(5).alias("k"), "query_id", "rnk", rel.alias("rel")
+    )
+    # a global aggregate: an empty query set still yields its one row
+    return _ir_per_query(spark, sf_dir, fan).agg(
         F.count("*").alias("n_queries"),
         F.round(F.sum("acc1").cast("double") / F.count("*"), 6).alias("accuracy_at_1"),
         F.round(
@@ -2010,23 +1957,12 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_topk_staged(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """The IVF bucketed ANN ranking, staged once per (corpus, params) and
-    shared by its two consumers — q22 always, and q20 above its exact-path
-    gate: both run the IDENTICAL _ivf_topk plan, so without the stage a
-    battery paid the centroid build + bucket self-join twice (guide §1.2:
-    don't compute things twice). Same StageStore discipline as
-    _lsh_pairs_staged: keyed on corpus identity + params, wiped per bench
-    run, durable within one."""
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
-
-    ph = params_hash(
-        "ivf_topk_v1", str(sf_dir), _corpus_mtime(sf_dir, "embeddings"), k
+    """The IVF bucketed ANN ranking: q22 emits it, and q20 above its
+    exact-path gate runs the identical plan."""
+    return _staged(
+        spark, sf_dir, "ivf_topk_v1", (k,),
+        lambda: _ivf_topk(spark, sf_dir, k), table="embeddings",
     )
-    stage = f"ivf_topk_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    return store.commit(stage, _ivf_topk(spark, sf_dir, k), ph)
 
 
 def q22_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2167,30 +2103,26 @@ FROM events
 
 def _er_clusters_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) connected components over the staged LSH pair
-    set, materialized ONCE per (corpus, params): q26 emits it and q44
-    derives canonical ids + cluster sizes from the SAME snapshot, so the
-    iterative CC never runs twice in a battery."""
+    set: q26 emits it and q44 derives canonical ids + cluster sizes from
+    it, so CC runs once per battery."""
     from tabiya_livelihoods_classifier_spark.operators.clustering import (
         connected_components,
     )
-    from tabiya_livelihoods_classifier_spark.storage import params_hash
 
-    ph = params_hash("er_clusters_v1", str(sf_dir), _corpus_mtime(sf_dir))
-    stage = f"er_clusters_{ph}"
-    store = _stage_store(spark)
-    if store.is_committed(stage, ph):
-        return store.read(stage)
-    # the staged pair snapshot is the durable barrier connected_components
-    # needs (its 2-branch symmetrizing union would otherwise re-run the
-    # whole LSH pipeline per branch)
-    edges = _lsh_pairs_staged(spark, sf_dir).select("id_a", "id_b")
-    nodes = _perturbed_corpus(spark, sf_dir).select(
-        F.col("doc_id").alias("rid")
-    )
-    clusters = connected_components(edges, nodes=nodes).select(
-        F.col("rid").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-    return store.commit(stage, clusters, ph)
+    def build() -> DataFrame:
+        # the staged pair snapshot is the durable barrier
+        # connected_components needs (its 2-branch symmetrizing union would
+        # otherwise re-run the whole LSH pipeline per branch)
+        edges = _lsh_pairs_staged(spark, sf_dir).select("id_a", "id_b")
+        nodes = _perturbed_corpus(spark, sf_dir).select(
+            F.col("doc_id").alias("rid")
+        )
+        return connected_components(edges, nodes=nodes).select(
+            F.col("rid").alias("doc_id"),
+            F.col("component").alias("cluster_id"),
+        )
+
+    return _staged(spark, sf_dir, "er_clusters_v1", (), build)
 
 
 def q26_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3118,81 +3050,16 @@ FROM c
 #      with a broadcast k table; IDCG relational (no hardcoded constants)
 # --------------------------------------------------------------------------
 
-from tabiya_livelihoods_classifier_spark.config import IR_KS as IR_K_GRID
-
-
 def q41_ir_multi_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    kmax = max(IR_K_GRID)
-    topk = _knn_topk_staged(spark, sf_dir, kmax)
-    rel = topk.withColumn(
-        "rel", (F.col("query_label") == F.col("candidate_label")).cast("int")
-    )
-    # raw embeddings for the relevance pool — same rationale as q21
-    nrel = _nrel_per_query(load(spark, sf_dir, "embeddings"))
-    dec = "decimal(18,12)"
+    rel = (F.col("query_label") == F.col("candidate_label")).cast("int")
     ks = arrow_frame(spark, [(k,) for k in IR_K_GRID], "k int")
-    fan = rel.crossJoin(F.broadcast(ks)).filter(F.col("rnk") <= F.col("k"))
-    cum_w = (
-        Window.partitionBy("k", "query_id")
-        .orderBy("rnk")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    fan = (
+        _knn_topk_staged(spark, sf_dir, max(IR_K_GRID))
+        .select("query_id", "rnk", rel.alias("rel"))
+        .crossJoin(F.broadcast(ks))
+        .filter(F.col("rnk") <= F.col("k"))
     )
-    fan = fan.withColumn("cum_rel", F.sum("rel").over(cum_w))
-    per_q = (
-        fan.groupBy("k", "query_id")
-        .agg(
-            F.max("rel").alias("acc"),
-            F.sum("rel").alias("hits"),
-            F.min(F.when(F.col("rel") == 1, F.col("rnk"))).alias("first_rel"),
-            F.sum(
-                F.when(
-                    F.col("rel") == 1,
-                    (F.lit(1.0) / F.log2(F.col("rnk") + 1)).cast(dec),
-                ).otherwise(F.lit(0).cast(dec))
-            ).alias("dcg"),
-            F.sum(
-                F.when(
-                    F.col("rel") == 1,
-                    (F.col("cum_rel").cast("double") / F.col("rnk")).cast(dec),
-                ).otherwise(F.lit(0).cast(dec))
-            ).alias("ap_num"),
-        )
-        .join(nrel, "query_id", "left")
-        .na.fill({"n_rel": 0})
-    )
-    idcg_tab = _idcg_table(spark, kmax)
-    per_q = per_q.join(
-        F.broadcast(idcg_tab),
-        F.least(F.col("n_rel"), F.col("k")) == idcg_tab.r,
-        "left",
-    )
-    per_q = per_q.select(
-        "k",
-        "query_id",
-        "acc",
-        "hits",
-        "n_rel",
-        F.coalesce(
-            (F.lit(1.0) / F.col("first_rel")).cast(dec), F.lit(0).cast(dec)
-        ).alias("rr"),
-        F.coalesce(
-            (F.col("dcg").cast("double") / F.col("idcg").cast("double")).cast(dec),
-            F.lit(0).cast(dec),
-        ).alias("ndcg"),
-        F.coalesce(
-            (
-                F.col("ap_num").cast("double")
-                / F.least(F.col("n_rel"), F.col("k")).cast("double")
-            ).cast(dec),
-            F.lit(0).cast(dec),
-        ).alias("ap"),
-        F.coalesce(
-            (F.col("hits").cast("double") / F.col("n_rel").cast("double")).cast(
-                dec
-            ),
-            F.lit(0).cast(dec),
-        ).alias("recall"),
-    )
+    per_q = _ir_per_query(spark, sf_dir, fan)
     return (
         per_q.groupBy("k")
         .agg(
@@ -3213,10 +3080,6 @@ def q41_ir_multi_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ndcg"
             ),
             F.round(F.sum("ap").cast("double") / F.count("*"), 6).alias("map"),
-        )
-        .select(
-            "k", "n_queries", "accuracy", "precision", "recall", "mrr",
-            "ndcg", "map",
         )
     )
 

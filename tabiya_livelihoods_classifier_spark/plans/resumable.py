@@ -75,11 +75,12 @@ def run_resumable(
         nonlocal parent
         h = params_hash(name, cfg_blob, parent)
         parent = h
-        if store.is_committed(name, h):
-            df = store.read(name)
-        else:
-            df = store.commit(name, compute(), h)
+
+        def build() -> DataFrame:
             computed.append(name)
+            return compute()
+
+        df = store.staged(name, h, build)
         done[name] = df
         if fail_after == name:
             raise StageFailure(f"injected failure after stage '{name}'")

@@ -29,6 +29,9 @@ A stage commit is:
 `is_committed(stage, params_hash)` is true iff the manifest exists AND its
 params_hash matches — changing any upstream config invalidates downstream
 stages automatically because each stage's hash chains its parent's.
+`staged(stage, params_hash, build)` is the one commit-or-read every
+consumer uses: it reads the snapshot when committed, else builds and
+commits it.
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +88,15 @@ class StageStore:
 
     def manifest(self, stage: str) -> dict:
         return json.loads(self._manifest(stage).read_text())
+
+    def staged(
+        self, stage: str, phash: str, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """The committed snapshot of `stage` at `phash`; `build()` runs and
+        commits only when no manifest carries that hash."""
+        if self.is_committed(stage, phash):
+            return self.read(stage)
+        return self.commit(stage, build(), phash)
 
     # -- commit ------------------------------------------------------------
     def commit(self, stage: str, df: DataFrame, phash: str) -> DataFrame:

@@ -2,13 +2,16 @@
 join/scan shapes that survive a 100x scale-up (no full-corpus broadcast,
 column pruning at the parquet scan). For the callers of the exact-cosine
 top-k kernel (q20/q21/q22/q38/q41) also: numpy == relational row parity,
-the DuckDB oracle on both paths, and the kernel's broadcast lifetime."""
+the DuckDB oracle on both paths, and the kernel's broadcast lifetime. Also
+the battery's stage memo and q12's pair-key domain check."""
 
 from __future__ import annotations
 
 import contextlib
 import importlib.util
 import io
+import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -19,6 +22,7 @@ from pyspark.broadcast import Broadcast
 
 from tabiya_livelihoods_classifier_spark.plans import queries as Q
 from tabiya_livelihoods_classifier_spark.plans.queries import ORACLE_SQL, QUERIES
+from tabiya_livelihoods_classifier_spark.storage import StageStore
 
 SF = "/root/testdata/sf0.001"
 SF01 = str(Path(SF).with_name("sf0.1"))
@@ -151,7 +155,9 @@ _TOPK_ORACLE = [
         "q38_entity_linking", "q41_ir_multi_k",
     )),
     ("q20_ann_topk", SF01),
+    ("q21_knn_ir_metrics", SF01),
     ("q22_ann_ivf", SF01),
+    ("q41_ir_multi_k", SF01),
 ]
 
 
@@ -217,3 +223,47 @@ def test_explain_tool_captures_kernel_plans(spark, monkeypatch, tmp_path):
         assert "MapInPandas" in p, p
         assert "BroadcastNestedLoopJoin" not in p, p
         assert "CartesianProduct" not in p, p
+
+
+def test_battery_stage_is_reused_until_its_source_changes(
+    spark, monkeypatch, tmp_path
+):
+    """A staged battery frame is committed once and read back by later
+    calls; a new mtime on the source table changes the stage key, so the
+    next call commits again."""
+    src = tmp_path / "sf" / "documents.parquet"
+    src.parent.mkdir()
+    shutil.copyfile(Path(SF) / "documents.parquet", src)
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stages"))
+    commits, commit = [], StageStore.commit
+
+    def spy(self, stage, df, phash):
+        commits.append(stage)
+        return commit(self, stage, df, phash)
+
+    monkeypatch.setattr(StageStore, "commit", spy)
+    Q._shingled_staged(spark, str(src.parent))
+    Q._shingled_staged(spark, str(src.parent))
+    assert len(commits) == 1
+
+    st = src.stat()
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    Q._shingled_staged(spark, str(src.parent))
+    assert len(commits) == 2 and commits[0] != commits[1]
+
+
+def test_q12_rejects_doc_ids_outside_the_packed_key(spark, monkeypatch, tmp_path):
+    """q12 packs doc_id into the top 39 bits of a bigint pair key: an id
+    outside [0, 2^39) fails the query instead of aliasing another doc."""
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stages"))
+    spark.createDataFrame(
+        [
+            (-7, "alpha beta gamma delta", "en"),
+            (1, "alpha beta gamma delta", "en"),
+            (2, "one two three four", "en"),
+        ],
+        "doc_id long, text string, lang string",
+    ).write.parquet(str(tmp_path / "sf" / "documents.parquet"))
+    with pytest.raises(Exception, match=r"outside \[0, 2\^39\)"):
+        Q.q12_jaccard_pairs(spark, str(tmp_path / "sf"))
+

@@ -193,6 +193,7 @@ def test_checkpoint_gc_reclaims_superseded_iterations(spark):
     iterations, and after dropping references the rdd-* checkpoint dirs
     must return to (near) the pre-run count — bounded, not monotonic."""
     import gc
+    import os
     import time
     from pathlib import Path
 
@@ -203,7 +204,15 @@ def test_checkpoint_gc_reclaims_superseded_iterations(spark):
     root = Path(ckpt.removeprefix("file:"))
 
     def rdd_dirs():
-        return {p for p in root.rglob("rdd-*") if p.is_dir()}
+        # the cleaner deletes dirs while this walks them: os.walk skips a
+        # dir that vanished mid-walk, where Path.rglob raised
+        # FileNotFoundError before the assertion below was ever reached
+        return {
+            p
+            for d, subdirs, _ in os.walk(root)
+            for p in (Path(d) / n for n in subdirs if n.startswith("rdd-"))
+            if p.is_dir()
+        }
 
     def run_cc_once():
         edges = spark.createDataFrame(
@@ -312,3 +321,30 @@ def test_footer_and_distributed_lineage_agree(spark, tmp_path, monkeypatch):
     assert f_lin == d_lin
     # committed data identical and re-readable through both stores
     assert footer_store.read("s").count() == dist_store.read("s").count() == 1000
+
+
+def test_staged_builds_once_per_params_hash(spark, tmp_path):
+    """StageStore.staged: a committed hash is read back without building,
+    a new hash rebuilds, and a manifest carrying another hash is not a
+    commit of this one."""
+    import json
+
+    store = StageStore(spark, tmp_path / "memo")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3).toDF("v")
+
+    assert store.staged("s", "h1", build).count() == 3
+    assert store.staged("s", "h1", build).count() == 3
+    assert len(builds) == 1
+
+    store.staged("s", "h2", build)
+    assert len(builds) == 2 and store.is_committed("s", "h2")
+
+    mf = store.root / "s" / "MANIFEST.json"
+    mf.write_text(json.dumps({**store.manifest("s"), "params_hash": "other"}))
+    assert store.staged("s", "h2", build).count() == 3
+    assert len(builds) == 3 and store.is_committed("s", "h2")
+
